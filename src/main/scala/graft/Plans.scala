@@ -22,11 +22,12 @@ object Plans {
   /** Normalized plan-shape digest: the multiset of physical operator
     * class names (execution wrappers stripped, so the digest is identical
     * with AQE on or off) plus a per-scan summary
-    * `scan:<table>[<#cols>,pushed?]`. PLAN_DIGESTS.json records one per
-    * declared query; PlanDigestSpec fails on ANY drift unless the file is
-    * regenerated in the same commit — a broadcast demoted to a sort-merge
-    * join, a lost filter pushdown, or a new exchange cannot slip through
-    * a refactor unreviewed.
+    * `scan:<table>[<#cols>,pushed?]`, written as sorted `name=count`
+    * pairs so a drift message shows which count moved. PLAN_DIGESTS.json
+    * records one per declared query; PlanDigestSpec fails on ANY drift
+    * unless the file is regenerated in the same commit — a broadcast
+    * demoted to a sort-merge join, a lost filter pushdown, or a new
+    * exchange cannot slip through a refactor unreviewed.
     */
   def digest(df: org.apache.spark.sql.DataFrame): String = {
     import org.apache.spark.sql.execution._
@@ -46,7 +47,7 @@ object Plans {
         if (skip(n)) None else Some(n)
     }.flatten
     parts.groupBy(identity).toSeq.sortBy(_._1)
-      .map { case (k, c) => s"$k=$c" }.mkString(";")
+      .map { case (k, c) => s"$k=${c.size}" }.mkString(";")
   }
 
   def main(args: Array[String]): Unit = {
