@@ -146,11 +146,27 @@ object Sinks {
     */
   def writeBucketed(df: DataFrame, table: String,
                     bucketCols: Seq[String], numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    saveBucketed(df, SaveMode.Overwrite, table, bucketCols, numBuckets)
+
+  /** The one bucketed + sorted parquet table write behind
+    * [[writeBucketed]], [[appendBucketed]] and [[compactBucketed]]:
+    * bucketed and sorted on the same columns. */
+  private def saveBucketed(df: DataFrame, mode: SaveMode, table: String,
+                           bucketCols: Seq[String], numBuckets: Int): Unit =
+    df.write.mode(mode)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+
+  /** A table name as a backtick-quoted SQL identifier — every DDL string
+    * here goes through it, so a backtick in a name cannot inject. */
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
+  private def renameTable(spark: SparkSession, from: String, to: String): Unit = {
+    spark.sql(s"ALTER TABLE ${quoted(from)} RENAME TO ${quoted(to)}")
+    ()
+  }
 
   /** Append a delta to an EXISTING bucketed table with the identical
     * bucket spec — the incremental-maintenance half of [[writeBucketed]].
@@ -170,32 +186,24 @@ object Sinks {
     * corpus), and the next compaction would see the name occupied and
     * drop `_cstg` — the corpus — permanently. So: if the name dangles
     * with a complete staging copy present, finish the interrupted swap
-    * first (the same self-heal as [[compactBucketed]]'s entry), and if
-    * neither exists, refuse — appends never create.
+    * first ([[healDanglingCompaction]], the same self-heal as
+    * [[compactBucketed]]'s entry), and if neither exists, refuse —
+    * appends never create.
     */
   def appendBucketed(df: DataFrame, table: String,
                      bucketCols: Seq[String], numBuckets: Int): Unit = {
     val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      val stg = table + "_cstg"
-      require(spark.catalog.tableExists(stg),
-        s"appendBucketed: table `$table` does not exist — appends never " +
-          "create (build it with writeBucketed first)")
-      // crash window of an interrupted compactBucketed: the staging table
-      // IS the complete compacted copy — finish the swap, then append
-      spark.sql(s"ALTER TABLE `$stg` RENAME TO `$table`")
-    }
-    df.write.mode(SaveMode.Append)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+    require(healDanglingCompaction(spark, table) ||
+      spark.catalog.tableExists(table),
+      s"appendBucketed: table `$table` does not exist — appends never " +
+        "create (build it with writeBucketed first)")
+    saveBucketed(df, SaveMode.Append, table, bucketCols, numBuckets)
   }
 
   /** Finish a [[compactBucketed]] swap that crashed between its DROP and
     * its RENAME: the table name dangles while the complete compacted copy
     * sits at `&lt;table&gt;_cstg`. [[compactBucketed]] and [[appendBucketed]]
-    * already self-heal this window at their own entry — but a PROBE that
+    * call this at their own entry — but a PROBE that
     * reads the table first (`spark.table(...)` inside a streaming door's
     * batch body) would throw TABLE_NOT_FOUND before ever reaching them,
     * wedging a long-running ingest on a state that is one metadata rename
@@ -210,11 +218,7 @@ object Sinks {
     val stg = table + "_cstg"
     val dangling = !spark.catalog.tableExists(table) &&
       spark.catalog.tableExists(stg)
-    if (dangling) {
-      spark.sql(s"ALTER TABLE `${stg.replace("`", "``")}` RENAME TO " +
-        s"`${table.replace("`", "``")}`")
-      ()
-    }
+    if (dangling) renameTable(spark, stg, table)
     dangling
   }
 
@@ -247,16 +251,13 @@ object Sinks {
     */
   def compactBucketed(spark: SparkSession, table: String,
                       bucketCols: Seq[String], numBuckets: Int): Unit = {
+    // crash window of a previous compaction (original dropped, RENAME
+    // not reached): the staging table IS the compacted result — finishing
+    // the swap is the whole job
+    if (healDanglingCompaction(spark, table)) return
+    require(spark.catalog.tableExists(table),
+      s"compactBucketed: neither `$table` nor its staging copy exists")
     val stg = table + "_cstg"
-    if (!spark.catalog.tableExists(table)) {
-      require(spark.catalog.tableExists(stg),
-        s"compactBucketed: neither `$table` nor its staging copy exists")
-      // crash window of a previous compaction (original dropped, RENAME
-      // not reached): the staging table IS the compacted result — finish
-      // the swap and return
-      spark.sql(s"ALTER TABLE `$stg` RENAME TO `$table`")
-      return
-    }
     dropTableAndLocation(spark, stg)
     // The forced-true-bucketed-scan flag must not leak to concurrent
     // planners in the same session (bench reps and the per-table build
@@ -265,14 +266,10 @@ object Sinks {
     // warehouse, isolated SQLConf — the flag flip is invisible outside.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s2.table(table)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(stg)
+    saveBucketed(s2.table(table), SaveMode.Overwrite, stg, bucketCols,
+      numBuckets)
     dropTableAndLocation(spark, table)
-    spark.sql(s"ALTER TABLE `$stg` RENAME TO `$table`")
+    renameTable(spark, stg, table)
   }
 
   /** W7 — notification (email) sink, file-backed: render each message row
@@ -340,14 +337,13 @@ object Sinks {
     * a quote in a path (or a crafted name) inject into the DDL.
     */
   def createTableIfNotExists(spark: SparkSession, name: String, path: String): Unit = {
-    val qName = "`" + name.replace("`", "``") + "`"
     val qPath = path.replace("'", "\\'")
     spark.sql(
-      s"CREATE TABLE IF NOT EXISTS $qName USING parquet LOCATION '$qPath'")
+      s"CREATE TABLE IF NOT EXISTS ${quoted(name)} USING parquet LOCATION '$qPath'")
   }
 
   def dropTable(spark: SparkSession, name: String): Unit =
-    spark.sql("DROP TABLE IF EXISTS `" + name.replace("`", "``") + "`")
+    spark.sql(s"DROP TABLE IF EXISTS ${quoted(name)}")
 
   /** Drop a managed table AND its warehouse location. The default
     * in-memory catalog dies with the session while the warehouse
@@ -366,8 +362,7 @@ object Sinks {
     // user data: drop the entry, never the files.
     val catalogLoc: Option[org.apache.hadoop.fs.Path] =
       if (spark.catalog.tableExists(name)) {
-        val qName = "`" + name.replace("`", "``") + "`"
-        val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $qName")
+        val desc = spark.sql(s"DESCRIBE TABLE EXTENDED ${quoted(name)}")
           .select("col_name", "data_type").collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
         val managed = desc.get("Type").exists(_.equalsIgnoreCase("MANAGED"))
@@ -395,8 +390,7 @@ object Sinks {
     * Hadoop filesystem, so the count is one bounded metadata listing on
     * any store. */
   def tableDataFileCount(spark: SparkSession, table: String): Int = {
-    val qName = "`" + table.replace("`", "``") + "`"
-    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $qName")
+    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED ${quoted(table)}")
       .select("col_name", "data_type").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val loc = new org.apache.hadoop.fs.Path(desc.getOrElse("Location",

@@ -147,6 +147,27 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(inc.nonEmpty, "fixture should contain cross-split near-dups")
   }
 
+  test("old-format minhash index: the probe refuses, naming the missing _meta column") {
+    val docs = Tables.documents(spark, TestSpark.sf)
+    def sh = graft.functions.ShingleFunctions.wordShingleHashes(
+      TextFunctions.tokens(col("text")), 3)
+    val cfg = Dedup.LshConfig(numHashes = 64, bandRows = 2)
+    val table = "t_old_meta_spec"
+    Dedup.writeMinHashIndex(docs.filter(col("doc_id") % 10 =!= 0), "doc_id",
+      sh, cfg, table, numBuckets = 4)
+    // rewrite _meta as a writer from before `num_buckets` left it
+    graft.sources.Sinks.dropTableAndLocation(spark, s"${table}_meta")
+    Seq((cfg.numHashes, cfg.bandRows, cfg.seed))
+      .toDF("num_hashes", "band_rows", "seed")
+      .write.format("parquet").saveAsTable(s"${table}_meta")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minHashNearDupsAgainstIndex(docs.filter(col("doc_id") % 10 === 0),
+        "doc_id", sh, 0.5, table, cfg)
+    }
+    assert(e.getMessage.contains("num_buckets"), e.getMessage)
+    assert(e.getMessage.contains("probing"), e.getMessage)
+  }
+
   test("hashed-shingle fast path finds the same pairs as string shingles") {
     val docs = Tables.documents(spark, TestSpark.sf)
     val viaStrings = Dedup.minHashNearDups(docs, "doc_id",

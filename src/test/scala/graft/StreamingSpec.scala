@@ -561,42 +561,38 @@ class StreamingSpec extends AnyFunSuite {
       "full source re-delivery must reconverge to the same corpus")
   }
 
-  test("indexed door crash between index append and sink append: replay routes accepted rows straight to the sink, exactly once") {
-    import graft.functions.{ShingleFunctions, TextFunctions}
-    import graft.operators.Dedup
+  /** The crash window between an indexed door's index append and its
+    * sink append, driven through `door` (batch, sink path): batch 1
+    * ingests, batch 2's accepted rows reach the index but not the real
+    * sink, and the replay of batch 2 must complete the crashed attempt
+    * exactly. Both indexed doors share one batch body; each runs this.
+    */
+  private def assertCrashWindowReplay(idCol: String, table: String,
+      b1: org.apache.spark.sql.DataFrame, b2: org.apache.spark.sql.DataFrame)(
+      door: (org.apache.spark.sql.DataFrame, String) => Unit): Unit = {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-door-crashwin")
-    val docs = Tables.documents(spark, TestSpark.sf)
-    def sh = ShingleFunctions.wordShingleHashes(TextFunctions.tokens(col("text")), 3)
-    val cfg = Dedup.LshConfig(numHashes = 64, bandRows = 2)
-    val table = "t_door_crashwin_spec"
     val sink = s"$tmp/corpus"
-    Dedup.writeMinHashIndex(docs.limit(0), "doc_id", sh, cfg, table)
-    val b1 = docs.filter(col("doc_id") % 3 === 0)
-    val b2 = docs.filter(col("doc_id") % 3 === 1)
-    graft.streaming.Streams.dedupIngestBatchIndexed(
-      b1, sink, "doc_id", sh, 0.5, cfg, table)
+    door(b1, sink)
     val afterB1 = spark.read.parquet(sink)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+      .select(idCol).as[Long].collect().sorted.toSeq
     // reference: what an uninterrupted batch-2 ingest would land (computed
     // on a throwaway COPY of the sink so the real state stays pristine; the
     // shared index advances — exactly the crash-window state: batch 2's
     // accepted rows are in the index, the real sink never saw them)
     val sinkCopy = s"$tmp/copy"
     spark.read.parquet(sink).write.parquet(sinkCopy)
-    graft.streaming.Streams.dedupIngestBatchIndexed(
-      b2, sinkCopy, "doc_id", sh, 0.5, cfg, table)
+    door(b2, sinkCopy)
     val expect = spark.read.parquet(sinkCopy)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+      .select(idCol).as[Long].collect().sorted.toSeq
     assert(spark.read.parquet(sink)
-      .select("doc_id").as[Long].collect().sorted.toSeq == afterB1,
+      .select(idCol).as[Long].collect().sorted.toSeq == afterB1,
       "crash-window precondition: real sink must not have batch 2 yet")
     // replay of batch 2 against the real sink: the indexed-but-not-sunk
     // rows must land verbatim (no re-probe), nothing twice
-    graft.streaming.Streams.dedupIngestBatchIndexed(
-      b2, sink, "doc_id", sh, 0.5, cfg, table)
+    door(b2, sink)
     val got = spark.read.parquet(sink)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+      .select(idCol).as[Long].collect().sorted.toSeq
     assert(got == expect,
       "replayed batch must complete the crashed attempt exactly")
     assert(got.distinct.size == got.size, "no id may land twice")
@@ -604,10 +600,47 @@ class StreamingSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted.toSeq
     assert(idxIds == got, "index and sink must be back in lockstep")
     // and a SECOND replay of the same batch is a complete no-op
-    graft.streaming.Streams.dedupIngestBatchIndexed(
-      b2, sink, "doc_id", sh, 0.5, cfg, table)
+    door(b2, sink)
     assert(spark.read.parquet(sink).count() == got.size,
       "consumed replays must append nothing")
+  }
+
+  test("indexed door crash between index append and sink append: replay routes accepted rows straight to the sink, exactly once") {
+    import graft.functions.{ShingleFunctions, TextFunctions}
+    import graft.operators.Dedup
+    val docs = Tables.documents(spark, TestSpark.sf)
+    def sh = ShingleFunctions.wordShingleHashes(TextFunctions.tokens(col("text")), 3)
+    val cfg = Dedup.LshConfig(numHashes = 64, bandRows = 2)
+    val table = "t_door_crashwin_spec"
+    Dedup.writeMinHashIndex(docs.limit(0), "doc_id", sh, cfg, table)
+    assertCrashWindowReplay("doc_id", table,
+        docs.filter(col("doc_id") % 3 === 0),
+        docs.filter(col("doc_id") % 3 === 1)) { (b, sink) =>
+      graft.streaming.Streams.dedupIngestBatchIndexed(
+        b, sink, "doc_id", sh, 0.5, cfg, table)
+    }
+  }
+
+  test("semantic indexed door crash between index append and sink append: replay routes accepted rows straight to the sink, exactly once") {
+    import graft.operators.Dedup
+    val emb = Tables.embeddings(spark, TestSpark.sf)
+      .select("vec_id", "embedding")
+    val table = "t_sem_door_crashwin_spec"
+    val anchors = emb.orderBy("vec_id").limit(8)
+      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
+    Dedup.writeSemanticIvfIndex(emb.limit(0), "vec_id", "embedding",
+      anchors, table, nassign = 2)
+    val b1 = emb.filter(col("vec_id") % 3 === 0)
+    // batch 2 also carries scaled copies of five batch-1 vectors (cosine
+    // 1), so the corpus probe has rows to reject on every attempt
+    val copies = b1.orderBy("vec_id").limit(5)
+      .select((col("vec_id") + 1000000L).as("vec_id"),
+        transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
+    assertCrashWindowReplay("vec_id", table, b1,
+        emb.filter(col("vec_id") % 3 === 1).unionByName(copies)) { (b, sink) =>
+      graft.streaming.Streams.semanticIngestBatchIndexed(
+        b, sink, "vec_id", "embedding", 0.99, table)
+    }
   }
 
   test("indexed door crash after sink write before offset commit: checkpoint recovery equals the uninterrupted run") {
