@@ -10,7 +10,11 @@ import java.nio.file.{Files, Paths}
   * static plans; AQE only improves on them at runtime (skew splits,
   * broadcast demotion/promotion).
   *
-  * Usage: `sbt "runMain graft.Plans [sfDir] [outFile]"`.
+  * The dump is not committed (PLAN_DIGESTS.json is the gated plan-shape
+  * record); regenerate it on demand.
+  *
+  * Usage: `scripts/run_main.sh graft.Plans [sfDir] [outFile]` after
+  * `sbt compile`, or `sbt "runMain graft.Plans [sfDir] [outFile]"`.
   */
 object Plans {
   /** EVERY declared query, alphabetically — the round-5 verdict found the

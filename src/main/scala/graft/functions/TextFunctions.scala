@@ -46,14 +46,6 @@ object TextFunctions {
     when(size(toks) >= n, g).otherwise(emptyStrArray)
   }
 
-  /** Distinct character n-gram shingles of a string; [] when shorter than n. */
-  def charShingles(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      array_distinct(transform(
-        sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n)))))
-      .otherwise(emptyStrArray)
-
   /** Exact Jaccard similarity of two set-valued (distinct) array columns. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)) / size(array_union(a, b))

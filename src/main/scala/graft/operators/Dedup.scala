@@ -38,9 +38,10 @@ object Dedup {
     * Jaccard ≥ 0.5 (miss probability (1−j)^numHashes), so verified output
     * equals brute force; raise `bandRows` at scale to trade recall for far
     * fewer candidates. `maxBucketSize` drops degenerate buckets (boilerplate
-    * shingles) to bound the worst-case self-join — the skew guard.
-    */
-  /** `estMargin` drives the cheap signature-estimate pre-filter between
+    * shingles) to bound the worst-case self-join — the [[dropOversized]]
+    * skew guard.
+    *
+    * `estMargin` drives the cheap signature-estimate pre-filter between
     * candidate generation and exact verification: candidates whose
     * signature-agreement fraction (an unbiased Jaccard estimate, sd =
     * sqrt(j(1−j)/numHashes)) falls below `threshold − estMargin` are
@@ -65,14 +66,155 @@ object Dedup {
     require(estMargin >= 0, s"estMargin=$estMargin must be >= 0")
   }
 
+  /** Skew guard of every banded/cell pair operator: drop the rows of
+    * `banded` whose bucket (`keys`) holds more than `max` rows, before the
+    * bucket equi-join would square them. The policy, stated once:
+    *
+    *  - the count is a partial-aggregate groupBy and the drop a broadcast
+    *    anti-join of the (rare) oversized keys — deliberately NOT a window
+    *    count. A corpus-scale hot bucket must never cross an exchange: the
+    *    partial aggregate ships one count per task and key, and the
+    *    broadcast anti-join filters `banded` where it sits, whereas a
+    *    window would co-locate each hot bucket on one task before the
+    *    filter could drop it (the §2.5 straggler this guard exists to
+    *    kill);
+    *  - a probe guards its CORPUS side only, so batch rows never count
+    *    toward a bucket's size: the corpus drives the join fan-out, and
+    *    dropping its rows from a hot bucket kills every pair that bucket
+    *    would have produced. Over a persisted index the groupBy key is the
+    *    bucketing key, so even the count aggregates without a shuffle.
+    *
+    * SCALE.md's deployment configuration gives the sizing rule for `max`.
+    */
+  private def dropOversized(banded: DataFrame, keys: Seq[String],
+                            max: Long): DataFrame = {
+    val oversized = banded
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("bucketSize"))
+      .filter(col("bucketSize") > max)
+      .select(keys.map(col): _*)
+    banded.join(broadcast(oversized), keys, "left_anti")
+  }
+
+  /** Output names and id predicate of a pair operator: a self-join emits
+    * each unordered pair once as (id_1, id_2) with id_1 < id_2; a probe
+    * emits (id_new, id_corpus) for every pair of distinct ids.
+    */
+  private final case class PairShape(a: String, b: String,
+                                     idPred: (Column, Column) => Column)
+  private val selfPairs = PairShape("id_1", "id_2", _ < _)
+  private val probePairs = PairShape("id_new", "id_corpus", _ =!= _)
+
+  /** Distinct candidate pairs of LSH/IVF candidate generation: `left` ⋈
+    * `right` on the bucket `keys` under the shape's id predicate — a
+    * hash-partitionable equi-join, never an all-pairs product. The caller
+    * guards ([[dropOversized]]) the side the policy counts.
+    */
+  private def candidatePairs(left: DataFrame, right: DataFrame,
+                             keys: Seq[String], shape: PairShape): DataFrame =
+    left.alias("l").join(right.alias("r"),
+        keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
+        shape.idPred(col("l.id"), col("r.id")))
+      .select(col("l.id").as(shape.a), col("r.id").as(shape.b))
+      .distinct()
+
+  /** An exact similarity over one payload column of the `(id, payload)`
+    * frames a pair operator verifies against, and its output column. */
+  private final case class Measure(payload: String, name: String,
+                                   sim: (Column, Column) => Column)
+  private val shingleJaccard = Measure("sh", "jaccard", TextFunctions.jaccard)
+  private val vectorCosine = Measure("v", "cosine", VectorFunctions.cosine)
+
+  /** Exact verify of candidate pairs: fetch each endpoint's payload by id
+    * (`shape.a` from `left`, `shape.b` from `right` — the only id-keyed
+    * joins), score with `m`, keep score ≥ `threshold`. Returns
+    * (shape.a, shape.b, m.name).
+    */
+  private def verifyPairs(candidates: DataFrame, shape: PairShape,
+                          left: DataFrame, right: DataFrame, m: Measure,
+                          threshold: Double): DataFrame =
+    candidates
+      .join(left.select(col("id").as(shape.a), col(m.payload).as("p_1")), shape.a)
+      .join(right.select(col("id").as(shape.b), col(m.payload).as("p_2")), shape.b)
+      .withColumn(m.name, m.sim(col("p_1"), col("p_2")))
+      .filter(col(m.name) >= threshold)
+      .select(col(shape.a), col(shape.b), col(m.name))
+
+  // bucket keys of the MinHash, hyperplane-LSH and IVF candidate joins
+  private val bandKeys = Seq("band", "bandHash")
+  private val sigKeys = Seq("band", "bandSig")
+  private val cellKey = Seq("cell")
+
+  /** `(id, sh)` rows of a MinHash input — the one base select of every
+    * MinHash build, append and probe. Empty shingle sets never pair. */
+  private def minHashBase(df: DataFrame, idCol: String,
+                          shingles: Column): DataFrame =
+    df.select(col(idCol).as("id"), shingles.as("sh"))
+      .filter(size(col("sh")) > 0)
+
+  private def minHashSig(cfg: LshConfig): Column =
+    HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed).as("sig")
+
+  /** One side of a MinHash pair join: `(id, sh)` payload, `(id, sig)`
+    * signatures and `(id, band, bandHash)` band rows. */
+  private final case class MinHashSide(base: DataFrame, sigs: DataFrame,
+                                       banded: DataFrame)
+
+  /** The [[MinHashSide]] of an input frame. The signature frame is
+    * consumed twice (banding, estimate pre-filter) and costs a full
+    * shingle+hash pass over every document — materialize it once. It is
+    * tiny relative to the corpus (numHashes longs per doc; at a trillion
+    * docs you would persist it to disk instead).
+    */
+  private def minHashSide(df: DataFrame, idCol: String, shingles: Column,
+                          cfg: LshConfig): MinHashSide = {
+    val base = minHashBase(df, idCol, shingles)
+    val sigs = base.select(col("id"), minHashSig(cfg)).localCheckpoint(true)
+    MinHashSide(base, sigs, sigs.select(col("id"), bandHashes(cfg)))
+  }
+
+  /** `side` with its band rows behind the [[dropOversized]] guard. */
+  private def guarded(side: MinHashSide, cfg: LshConfig): MinHashSide =
+    side.copy(banded = dropOversized(side.banded, bandKeys, cfg.maxBucketSize))
+
+  /** MinHash candidate generation → signature-estimate pre-filter → exact
+    * Jaccard verify, `left` against the already-guarded `right`.
+    *
+    * The pre-filter (off unless `cfg.estMargin < 1`): candidate pairs at
+    * baseline similarity (the overwhelming majority with narrow bands) die
+    * against the compact numHashes-long signatures instead of dragging
+    * full shingle arrays through the verify join — the arrays are
+    * ~10-100x heavier per row.
+    */
+  private def minHashPairs(left: MinHashSide, right: MinHashSide,
+                           shape: PairShape, threshold: Double,
+                           cfg: LshConfig): DataFrame = {
+    val candidates = candidatePairs(left.banded, right.banded, bandKeys, shape)
+    val estFiltered =
+      if (cfg.estMargin >= 1.0) candidates
+      else candidates
+        .join(left.sigs.select(col("id").as(shape.a), col("sig").as("sig_1")), shape.a)
+        .join(right.sigs.select(col("id").as(shape.b), col("sig").as("sig_2")), shape.b)
+        .withColumn("est",
+          aggregate(
+            zip_with(col("sig_1"), col("sig_2"),
+              (x, y) => when(x === y, 1).otherwise(0)),
+            lit(0), (acc, x) => acc + x).cast("double") / cfg.numHashes)
+        .filter(col("est") >= threshold - cfg.estMargin)
+        .select(col(shape.a), col(shape.b))
+    verifyPairs(estFiltered, shape, left.base, right.base, shingleJaccard,
+      threshold)
+  }
+
   /** Near-duplicate pairs by MinHash-LSH over a shingle-set column, verified
     * with exact Jaccard ≥ `threshold`. Returns (id_1, id_2, jaccard) with
     * id_1 < id_2.
     *
     * Plan shape (scale-first): signature (narrow, codegen) → band explode
-    * (rows × bands) → shuffle on (band, bandHash) via self-join → distinct
-    * candidate pairs → re-join the two shingle sets → exact verify. The
-    * only wide ops are the band-key join and the two id-keyed joins.
+    * (rows × bands) → [[dropOversized]] guard → shuffle on (band,
+    * bandHash) via self-join → distinct candidate pairs → re-join the two
+    * shingle sets → exact verify. The only wide ops are the band-key join
+    * and the two id-keyed joins.
     */
   def minHashNearDups(
       df: DataFrame, idCol: String, shingles: Column,
@@ -82,85 +224,10 @@ object Dedup {
     // streaming doors call this per micro-batch where an extra exchange
     // job costs more than the parallelism buys, and word-shingle callers
     // are not compute-bound (dedup_minhash read 0.83× with the spread).
-    val base = df
-      .select(col(idCol).as("id"), shingles.as("sh"))
-      .filter(size(col("sh")) > 0)
-
-    // The signature frame is consumed twice (banding, estimate pre-filter)
-    // and costs a full shingle+hash pass over every document — materialize
-    // it once. It is tiny relative to the corpus (numHashes longs per doc;
-    // at a trillion docs you would persist it to disk instead).
-    val sigs = base
-      .select(col("id"),
-        HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed).as("sig"))
-      .localCheckpoint(true)
-
-    val banded = sigs.select(col("id"), bandHashes(cfg))
-
-    // Skew guard: drop degenerate buckets (boilerplate shingles) before the
-    // self-join. A partial-agg groupBy + broadcast anti-join of the (rare)
-    // oversized keys — deliberately NOT a window count: the guard's whole
-    // point is that corpus-scale hot buckets never cross an exchange, and
-    // a window would co-locate each hot bucket on one task before the
-    // filter could drop it (the §2.5 straggler this guard exists to kill).
-    val oversized = banded
-      .groupBy(col("band"), col("bandHash"))
-      .agg(count(lit(1)).as("bucketSize"))
-      .filter(col("bucketSize") > cfg.maxBucketSize)
-      .select(col("band"), col("bandHash"))
-    val pruned = banded.join(broadcast(oversized), Seq("band", "bandHash"), "left_anti")
-
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") &&
-        col("a.bandHash") === col("b.bandHash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .distinct()
-
-    // Signature-estimate pre-filter: candidate pairs at baseline similarity
-    // (the overwhelming majority with narrow bands) die against the compact
-    // numHashes-long signatures instead of dragging full shingle arrays
-    // through the verify join — the arrays are ~10-100x heavier per row.
-    val estFiltered =
-      if (cfg.estMargin >= 1.0) candidates
-      else candidates
-        .join(sigs.select(col("id").as("id_1"), col("sig").as("sig_1")), "id_1")
-        .join(sigs.select(col("id").as("id_2"), col("sig").as("sig_2")), "id_2")
-        .withColumn("est",
-          aggregate(
-            zip_with(col("sig_1"), col("sig_2"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast("double") / cfg.numHashes)
-        .filter(col("est") >= threshold - cfg.estMargin)
-        .select(col("id_1"), col("id_2"))
-
-    estFiltered
-      .join(base.select(col("id").as("id_1"), col("sh").as("sh_1")), "id_1")
-      .join(base.select(col("id").as("id_2"), col("sh").as("sh_2")), "id_2")
-      .withColumn("jaccard", TextFunctions.jaccard(col("sh_1"), col("sh_2")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_1"), col("id_2"), col("jaccard"))
+    val side = guarded(minHashSide(df, idCol, shingles, cfg), cfg)
+    minHashPairs(side, side, selfPairs, threshold, cfg)
   }
 
-  /** Resolve near-dup pairs into canonical-document assignments: every doc
-    * in a duplicate cluster maps to the cluster's minimum id (connected
-    * components by iterative min-label propagation over the pair edges).
-    * Returns (id, canonical_id) for every id appearing in `pairs`;
-    * `keepCorpus(df, ...)` then drops non-canonical rows.
-    *
-    * Each iteration is one shuffle (groupBy id over the edge list) and
-    * propagates labels one edge-hop, so convergence takes O(cluster
-    * diameter) rounds; the loop stops as soon as a round changes no label
-    * (at which point the result equals the true transitive closure).
-    * Duplicate clusters are near-cliques in practice (diameter ≈ 1–2);
-    * `maxIters` is a safety bound for pathological chains, and a
-    * non-converged residue still yields a valid, deterministic partition
-    * refinement — safe, just less aggressive. The per-round localCheckpoint
-    * blocks are released asynchronously by Spark's ContextCleaner once the
-    * intermediate frames become unreachable.
-    */
   /** Incremental near-dup check: probe a NEW batch against the existing
     * corpus without ever pairing the corpus with itself — the operation a
     * running 100 TB pipeline actually performs on every ingest. Join cost
@@ -169,10 +236,8 @@ object Dedup {
     * would precompute once and persist alongside the corpus.
     *
     * Same algebra as [[minHashNearDups]] (banded signature equi-join →
-    * signature-estimate pre-filter → exact-Jaccard verify), with the skew
-    * guard counting bucket sizes on the CORPUS side only — the index side
-    * drives join fan-out, and dropping its rows from a hot bucket kills
-    * every pair that bucket would have produced.
+    * signature-estimate pre-filter → exact-Jaccard verify), with the
+    * [[dropOversized]] guard on the CORPUS side.
     *
     * Returns (id_new, id_corpus, jaccard), exact above `threshold` for
     * every pair the banding recalls (miss probability (1−t^r)^bands, same
@@ -182,50 +247,9 @@ object Dedup {
       corpus: DataFrame, newBatch: DataFrame, idCol: String,
       corpusShingles: Column, newShingles: Column,
       threshold: Double, cfg: LshConfig = LshConfig()): DataFrame = {
-    def prep(df: DataFrame, shingles: Column) = {
-      val base = df.select(col(idCol).as("id"), shingles.as("sh"))
-        .filter(size(col("sh")) > 0)
-      val sigs = base.select(col("id"),
-          HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed).as("sig"))
-        .localCheckpoint(true)
-      (base, sigs, sigs.select(col("id"), bandHashes(cfg)))
-    }
-    val (cBase, cSigs, cBanded) = prep(corpus, corpusShingles)
-    val (nBase, nSigs, nBanded) = prep(newBatch, newShingles)
-
-    val oversized = cBanded
-      .groupBy(col("band"), col("bandHash"))
-      .agg(count(lit(1)).as("bucketSize"))
-      .filter(col("bucketSize") > cfg.maxBucketSize)
-      .select(col("band"), col("bandHash"))
-    val cPruned = cBanded.join(broadcast(oversized), Seq("band", "bandHash"), "left_anti")
-
-    val candidates = nBanded.alias("n").join(cPruned.alias("c"),
-        col("n.band") === col("c.band") &&
-        col("n.bandHash") === col("c.bandHash") &&
-        col("n.id") =!= col("c.id"))
-      .select(col("n.id").as("id_new"), col("c.id").as("id_corpus"))
-      .distinct()
-
-    val estFiltered =
-      if (cfg.estMargin >= 1.0) candidates
-      else candidates
-        .join(nSigs.select(col("id").as("id_new"), col("sig").as("sig_1")), "id_new")
-        .join(cSigs.select(col("id").as("id_corpus"), col("sig").as("sig_2")), "id_corpus")
-        .withColumn("est",
-          aggregate(
-            zip_with(col("sig_1"), col("sig_2"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast("double") / cfg.numHashes)
-        .filter(col("est") >= threshold - cfg.estMargin)
-        .select(col("id_new"), col("id_corpus"))
-
-    estFiltered
-      .join(nBase.select(col("id").as("id_new"), col("sh").as("sh_1")), "id_new")
-      .join(cBase.select(col("id").as("id_corpus"), col("sh").as("sh_2")), "id_corpus")
-      .withColumn("jaccard", TextFunctions.jaccard(col("sh_1"), col("sh_2")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_corpus"), col("jaccard"))
+    val c = minHashSide(corpus, idCol, corpusShingles, cfg)
+    val n = minHashSide(newBatch, idCol, newShingles, cfg)
+    minHashPairs(n, guarded(c, cfg), probePairs, threshold, cfg)
   }
 
   /** Persist the reusable MinHash index for a standing corpus — the
@@ -260,12 +284,9 @@ object Dedup {
     // saveAsTable refuses an orphaned location — clear both first
     Seq("_docs", "_bands", "_meta").foreach(s =>
       graft.sources.Sinks.dropTableAndLocation(spark, table + s))
-    val base = corpus.select(col(idCol).as("id"), shingles.as("sh"))
-      .filter(size(col("sh")) > 0)
     graft.sources.Sinks.writeBucketed(
-      base.select(col("id"), col("sh"),
-        HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed)
-          .as("sig")),
+      minHashBase(corpus, idCol, shingles)
+        .select(col("id"), col("sh"), minHashSig(cfg)),
       s"${table}_docs", Seq("id"), numBuckets)
     graft.sources.Sinks.writeBucketed(
       spark.table(s"${table}_docs").select(col("id"), bandHashes(cfg)),
@@ -372,16 +393,11 @@ object Dedup {
       preReadMeta: Option[org.apache.spark.sql.Row] = None): Unit = {
     val meta = preReadMeta.getOrElse(minHashIndexMeta(delta.sparkSession, table))
     requireMinHashConfig(meta, table, cfg, "append")
-    appendToIndex(
-      delta.select(col(idCol).as("id"), shingles.as("sh"))
-        .filter(size(col("sh")) > 0),
-      table, minHashLayout,
+    appendToIndex(minHashBase(delta, idCol, shingles), table, minHashLayout,
       // the bucket count travels with the index: an append under a
       // different count would silently break bucket-pruned joins
       meta.getAs[Int]("num_buckets"),
-      _.select(col("id"), col("sh"),
-        HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed)
-          .as("sig")),
+      _.select(col("id"), col("sh"), minHashSig(cfg)),
       _.select(col("id"), bandHashes(cfg)))
   }
 
@@ -521,52 +537,28 @@ object Dedup {
       preReadMeta.getOrElse(minHashIndexMeta(spark, table)), table, cfg, "probe")
 
     val cDocs = spark.table(s"${table}_docs")
-    val cBanded = spark.table(s"${table}_bands")
-    val nBase = newBatch.select(col(idCol).as("id"), newShingles.as("sh"))
-      .filter(size(col("sh")) > 0)
-    val nSigs = nBase.select(col("id"),
-        HashFunctions.minhashSignature(col("sh"), cfg.numHashes, cfg.seed).as("sig"))
-      .localCheckpoint(true)
-    val nBanded = nSigs.select(col("id"), bandHashes(cfg))
-
-    // skew guard over the bucketed band table: the groupBy key equals the
-    // bucketing key, so even the guard count aggregates without a shuffle
-    val oversized = cBanded
-      .groupBy(col("band"), col("bandHash"))
-      .agg(count(lit(1)).as("bucketSize"))
-      .filter(col("bucketSize") > cfg.maxBucketSize)
-      .select(col("band"), col("bandHash"))
-    val cPruned = cBanded
-      .join(broadcast(oversized), Seq("band", "bandHash"), "left_anti")
-
-    val candidates = nBanded.alias("n").join(cPruned.alias("c"),
-        col("n.band") === col("c.band") &&
-        col("n.bandHash") === col("c.bandHash") &&
-        col("n.id") =!= col("c.id"))
-      .select(col("n.id").as("id_new"), col("c.id").as("id_corpus"))
-      .distinct()
-
-    val estFiltered =
-      if (cfg.estMargin >= 1.0) candidates
-      else candidates
-        .join(nSigs.select(col("id").as("id_new"), col("sig").as("sig_1")), "id_new")
-        .join(cDocs.select(col("id").as("id_corpus"), col("sig").as("sig_2")), "id_corpus")
-        .withColumn("est",
-          aggregate(
-            zip_with(col("sig_1"), col("sig_2"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast("double") / cfg.numHashes)
-        .filter(col("est") >= threshold - cfg.estMargin)
-        .select(col("id_new"), col("id_corpus"))
-
-    estFiltered
-      .join(nBase.select(col("id").as("id_new"), col("sh").as("sh_1")), "id_new")
-      .join(cDocs.select(col("id").as("id_corpus"), col("sh").as("sh_2")), "id_corpus")
-      .withColumn("jaccard", TextFunctions.jaccard(col("sh_1"), col("sh_2")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_corpus"), col("jaccard"))
+    minHashPairs(minHashSide(newBatch, idCol, newShingles, cfg),
+      guarded(MinHashSide(cDocs, cDocs, spark.table(s"${table}_bands")), cfg),
+      probePairs, threshold, cfg)
   }
 
+  /** Resolve near-dup pairs into canonical-document assignments: every doc
+    * in a duplicate cluster maps to the cluster's minimum id (connected
+    * components by iterative min-label propagation over the pair edges).
+    * Returns (id, canonical_id) for every id appearing in `pairs`;
+    * `keepCorpus(df, ...)` then drops non-canonical rows.
+    *
+    * Each iteration is one shuffle (groupBy id over the edge list) and
+    * propagates labels one edge-hop, so convergence takes O(cluster
+    * diameter) rounds; the loop stops as soon as a round changes no label
+    * (at which point the result equals the true transitive closure).
+    * Duplicate clusters are near-cliques in practice (diameter ≈ 1–2);
+    * `maxIters` is a safety bound for pathological chains, and a
+    * non-converged residue still yields a valid, deterministic partition
+    * refinement — safe, just less aggressive. The per-round localCheckpoint
+    * blocks are released asynchronously by Spark's ContextCleaner once the
+    * intermediate frames become unreachable.
+    */
   def canonicalAssignments(pairs: DataFrame, maxIters: Int = 20,
                            reliable: Boolean = false): DataFrame = {
     // Lineage truncation per round is mandatory (the plan doubles per
@@ -972,9 +964,8 @@ object Dedup {
     * Banding math: vectors at angle θ agree on one plane with
     * p = 1 − θ/π, collide in a band of `bandBits` planes with p^bandBits,
     * and become candidates if ANY of `numBands` bands collides —
-    * P = 1 − (1 − p^bandBits)^numBands. The skew guard drops degenerate
-    * buckets (e.g. zero vectors all signing identically) the same way the
-    * MinHash path does: partial-agg count + broadcast anti-join.
+    * P = 1 − (1 − p^bandBits)^numBands. The [[dropOversized]] guard drops
+    * degenerate buckets (e.g. zero vectors all signing identically).
     *
     * Returns verified (id_1, id_2, cosine) with id_1 &lt; id_2.
     */
@@ -988,74 +979,75 @@ object Dedup {
         "probes) or 2 (query-directed probes over <=2-bit flip sets)")
     require(maxProbeBits >= 1, s"maxProbeBits=$maxProbeBits must be >= 1")
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // bounded driver action: a 1-row dim probe (same pattern as lshTopK)
-    val dimRow = base.select(size(col("v"))).limit(1).collect().headOption
-    dimRow match {
-      case None =>
-        base.limit(0).select(col("id").as("id_1"), col("id").as("id_2"),
-          lit(0.0).as("cosine"))
-      case Some(row) =>
-        val dim = row.getInt(0)
-        val planes = Similarity.hyperplanes(dim, bandBits * numBands, seed)
-        // Multi-probe (Lv et al., VLDB 2007, margin-aware): probe rows on
-        // ONE side also carry the signatures with the min(bandBits,
-        // maxProbeBits) LEAST-CONFIDENT bits flipped — a pair whose band
-        // signatures differ in exactly one bit meets when the flip on
-        // side a lands on side b's exact bucket. One probed side covers
-        // ALL single-bit differences only while the probe set is complete
-        // (bandBits ≤ maxProbeBits); in the margin-TRUNCATED regime a
-        // disagreement bit outside the probe side's q lowest-margin planes
-        // is missed even if the other side would have flipped it — recall
-        // there relies on disagreement bits having small |dot| margin on
-        // the PROBED side, which is where similar-pair sign flips
-        // concentrate. At bandBits ≤ maxProbeBits the probe set is ALL
-        // single flips
-        // (per-band recall p^b → p^b + b·p^(b−1)(1−p)); past it — the
-        // corpus-adaptive geometry widening bands with log n — the probe
-        // count stays CONSTANT instead of growing with bandBits, and the
-        // flips it keeps are precisely the lowest-|dot| planes where
-        // similar-pair disagreements concentrate. probeDepth=2 upgrades
-        // to Lv §4.2's full query-directed sequence: the maxProbeBits
-        // best flip SETS of ≤2 bits by summed margin — a 2-bit
-        // disagreement on two near-zero margins is likelier than a 1-bit
-        // flip on a confident plane, so held recall costs fewer probe
-        // rows (RecallBench measures the trade at sf1/sf3).
-        val banded =
-          if (probeDepth == 0)
-            base.select(col("id"),
-              posexplode(VectorFunctions.hyperplaneSignatures(col("v"), planes, bandBits))
-                .as(Seq("band", "bandSig")))
-          else
-            base.select(col("id"),
-              posexplode(VectorFunctions.hyperplaneProbes(col("v"), planes,
-                bandBits, maxProbeBits, maxFlip = probeDepth))
-                .as(Seq("band", "probeSigs")))
-              .select(col("id"), col("band"),
-                col("probeSigs").getItem(0).as("bandSig"), col("probeSigs"))
-        val oversized = banded.groupBy(col("band"), col("bandSig"))
-          .agg(count(lit(1)).as("bucketSize"))
-          .filter(col("bucketSize") > maxBucketSize)
-          .select(col("band"), col("bandSig"))
-        val pruned = banded
-          .join(broadcast(oversized), Seq("band", "bandSig"), "left_anti")
-        val probed = if (probeDepth == 0) pruned else
-          pruned.select(col("id"), col("band"),
-            explode(col("probeSigs")).as("bandSig"))
-        val candidates = probed.alias("a").join(
-            pruned.select(col("id"), col("band"), col("bandSig")).alias("b"),
-            col("a.band") === col("b.band") &&
-            col("a.bandSig") === col("b.bandSig") &&
-            col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-          .distinct()
-        candidates
-          .join(base.select(col("id").as("id_1"), col("v").as("v1")), "id_1")
-          .join(base.select(col("id").as("id_2"), col("v").as("v2")), "id_2")
-          .withColumn("cosine", VectorFunctions.cosine(col("v1"), col("v2")))
-          .filter(col("cosine") >= threshold)
-          .select(col("id_1"), col("id_2"), col("cosine"))
+    withHyperplanes(base, selfPairs, bandBits * numBands, seed) { planes =>
+      // Multi-probe (Lv et al., VLDB 2007, margin-aware): probe rows on
+      // ONE side also carry the signatures with the min(bandBits,
+      // maxProbeBits) LEAST-CONFIDENT bits flipped — a pair whose band
+      // signatures differ in exactly one bit meets when the flip on
+      // side a lands on side b's exact bucket. One probed side covers
+      // ALL single-bit differences only while the probe set is complete
+      // (bandBits ≤ maxProbeBits); in the margin-TRUNCATED regime a
+      // disagreement bit outside the probe side's q lowest-margin planes
+      // is missed even if the other side would have flipped it — recall
+      // there relies on disagreement bits having small |dot| margin on
+      // the PROBED side, which is where similar-pair sign flips
+      // concentrate. At bandBits ≤ maxProbeBits the probe set is ALL
+      // single flips
+      // (per-band recall p^b → p^b + b·p^(b−1)(1−p)); past it — the
+      // corpus-adaptive geometry widening bands with log n — the probe
+      // count stays CONSTANT instead of growing with bandBits, and the
+      // flips it keeps are precisely the lowest-|dot| planes where
+      // similar-pair disagreements concentrate. probeDepth=2 upgrades
+      // to Lv §4.2's full query-directed sequence: the maxProbeBits
+      // best flip SETS of ≤2 bits by summed margin — a 2-bit
+      // disagreement on two near-zero margins is likelier than a 1-bit
+      // flip on a confident plane, so held recall costs fewer probe
+      // rows (RecallBench measures the trade at sf1/sf3).
+      val banded =
+        if (probeDepth == 0) hyperplaneBands(base, planes, bandBits)
+        else
+          base.select(col("id"),
+            posexplode(VectorFunctions.hyperplaneProbes(col("v"), planes,
+              bandBits, maxProbeBits, maxFlip = probeDepth))
+              .as(Seq("band", "probeSigs")))
+            .select(col("id"), col("band"),
+              col("probeSigs").getItem(0).as("bandSig"), col("probeSigs"))
+      val pruned = dropOversized(banded, sigKeys, maxBucketSize)
+      val probed = if (probeDepth == 0) pruned else
+        pruned.select(col("id"), col("band"),
+          explode(col("probeSigs")).as("bandSig"))
+      verifyPairs(
+        candidatePairs(probed,
+          pruned.select(col("id"), col("band"), col("bandSig")), sigKeys,
+          selfPairs),
+        selfPairs, base, base, vectorCosine, threshold)
     }
   }
+
+  /** Run `pairs` over the random hyperplanes of a semantic LSH operator.
+    * Their dimension comes from a bounded driver action on `base` — a
+    * 1-row dim probe (same pattern as [[Similarity.lshTopK]]); an empty
+    * `base` has no dimension and yields the empty (shape.a, shape.b,
+    * cosine) frame.
+    */
+  private def withHyperplanes(base: DataFrame, shape: PairShape,
+                              numPlanes: Int, seed: Long)(
+      pairs: Array[Array[Double]] => DataFrame): DataFrame =
+    base.select(size(col("v"))).limit(1).collect().headOption match {
+      case None =>
+        base.limit(0).select(col("id").as(shape.a), col("id").as(shape.b),
+          lit(0.0).as("cosine"))
+      case Some(row) =>
+        pairs(Similarity.hyperplanes(row.getInt(0), numPlanes, seed))
+    }
+
+  /** `(id, band, bandSig)` rows: each vector's `bandBits`-plane signature
+    * per band. */
+  private def hyperplaneBands(base: DataFrame, planes: Array[Array[Double]],
+                              bandBits: Int): DataFrame =
+    base.select(col("id"),
+      posexplode(VectorFunctions.hyperplaneSignatures(col("v"), planes, bandBits))
+        .as(Seq("band", "bandSig")))
 
   /** Incremental semantic near-dup probe: a NEW batch of embeddings
     * checked against the standing corpus without ever pairing the corpus
@@ -1065,9 +1057,9 @@ object Dedup {
     * frame is what a deployment would precompute and persist alongside the
     * corpus embeddings; join cost is |new| × bucket-mates.
     *
-    * Same banding and skew guard as [[semanticNearDups]] (guard counts the
-    * CORPUS side — it drives the fan-out); returns verified
-    * (id_new, id_corpus, cosine).
+    * Same banding as [[semanticNearDups]], with the [[dropOversized]]
+    * guard on the CORPUS side; returns verified (id_new, id_corpus,
+    * cosine).
     */
   def semanticNearDupsAgainst(
       corpus: DataFrame, newBatch: DataFrame, idCol: String, vecCol: String,
@@ -1075,36 +1067,13 @@ object Dedup {
       seed: Long = 42L, maxBucketSize: Long = 100000L): DataFrame = {
     val cBase = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val nBase = newBatch.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val dimRow = nBase.select(size(col("v"))).limit(1).collect().headOption
-    dimRow match {
-      case None =>
-        nBase.limit(0).select(col("id").as("id_new"), col("id").as("id_corpus"),
-          lit(0.0).as("cosine"))
-      case Some(row) =>
-        val dim = row.getInt(0)
-        val planes = Similarity.hyperplanes(dim, bandBits * numBands, seed)
-        def banded(df: DataFrame) = df.select(col("id"),
-          posexplode(VectorFunctions.hyperplaneSignatures(col("v"), planes, bandBits))
-            .as(Seq("band", "bandSig")))
-        val cBanded = banded(cBase)
-        val oversized = cBanded.groupBy(col("band"), col("bandSig"))
-          .agg(count(lit(1)).as("bucketSize"))
-          .filter(col("bucketSize") > maxBucketSize)
-          .select(col("band"), col("bandSig"))
-        val cPruned = cBanded
-          .join(broadcast(oversized), Seq("band", "bandSig"), "left_anti")
-        val candidates = banded(nBase).alias("n").join(cPruned.alias("c"),
-            col("n.band") === col("c.band") &&
-            col("n.bandSig") === col("c.bandSig") &&
-            col("n.id") =!= col("c.id"))
-          .select(col("n.id").as("id_new"), col("c.id").as("id_corpus"))
-          .distinct()
-        candidates
-          .join(nBase.select(col("id").as("id_new"), col("v").as("v1")), "id_new")
-          .join(cBase.select(col("id").as("id_corpus"), col("v").as("v2")), "id_corpus")
-          .withColumn("cosine", VectorFunctions.cosine(col("v1"), col("v2")))
-          .filter(col("cosine") >= threshold)
-          .select(col("id_new"), col("id_corpus"), col("cosine"))
+    withHyperplanes(nBase, probePairs, bandBits * numBands, seed) { planes =>
+      val cPruned = dropOversized(hyperplaneBands(cBase, planes, bandBits),
+        sigKeys, maxBucketSize)
+      verifyPairs(
+        candidatePairs(hyperplaneBands(nBase, planes, bandBits), cPruned,
+          sigKeys, probePairs),
+        probePairs, nBase, cBase, vectorCosine, threshold)
     }
   }
 
@@ -1125,10 +1094,9 @@ object Dedup {
     * al.'s multiple-assignment) makes a pair a candidate whenever ANY of
     * the nassign² cell combinations intersect, which covers the
     * borderline-between-two-cells geometry that single assignment
-    * misses. The skew guard drops cells larger than `maxCellSize`
-    * (degenerate centroid sets) the same way the banded paths drop
-    * degenerate buckets — size `cells` via [[Similarity.ivfCellCount]] so
-    * healthy cells sit far below the guard.
+    * misses. The [[dropOversized]] guard drops cells larger than
+    * `maxCellSize` (degenerate centroid sets) — size `cells` via
+    * [[Similarity.ivfCellCount]] so healthy cells sit far below it.
     *
     * `cells` is (cell, centroid) — PARAMETER-sized (explicit ≤ 2¹⁶
     * require; the same planes/codebooks discipline the LSH and PQ paths
@@ -1176,22 +1144,10 @@ object Dedup {
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
     val route = routeCellsExpr(col("v"), flat, dim, nassign, groupProbe,
       groupCells)
-    val assigned = base.select(col("id"), explode(route).as("cell"))
-    val oversized = assigned.groupBy(col("cell"))
-      .agg(count(lit(1)).as("cellSize"))
-      .filter(col("cellSize") > maxCellSize)
-      .select(col("cell"))
-    val pruned = assigned.join(broadcast(oversized), Seq("cell"), "left_anti")
-    val candidates = pruned.alias("a").join(pruned.alias("b"),
-        col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .distinct()
-    candidates
-      .join(base.select(col("id").as("id_1"), col("v").as("v1")), "id_1")
-      .join(base.select(col("id").as("id_2"), col("v").as("v2")), "id_2")
-      .withColumn("cosine", VectorFunctions.cosine(col("v1"), col("v2")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_1"), col("id_2"), col("cosine"))
+    val pruned = dropOversized(
+      base.select(col("id"), explode(route).as("cell")), cellKey, maxCellSize)
+    verifyPairs(candidatePairs(pruned, pruned, cellKey, selfPairs),
+      selfPairs, base, base, vectorCosine, threshold)
   }
 
   /** Cluster-coherence audit for the IVF route — the runtime check of the
@@ -1483,9 +1439,8 @@ object Dedup {
     * expression) and candidate pairs come from the equi-join of the
     * batch's cells against the bucketed corpus assignments — the corpus
     * is never re-routed, never re-shuffled (ScaleSpec pins the
-    * exchange-free plan). Skew guard counts the CORPUS side's cells (the
-    * join fan-out driver), an aggregation on the bucketing key — itself
-    * exchange-free. Returns verified (id_new, id_corpus, cosine), the
+    * exchange-free plan). The [[dropOversized]] guard counts the CORPUS
+    * side's cells. Returns verified (id_new, id_corpus, cosine), the
     * [[semanticNearDupsAgainst]] contract.
     */
   def semanticNearDupsIvfAgainstIndex(
@@ -1512,29 +1467,15 @@ object Dedup {
     val spark = newBatch.sparkSession
     healIndexTables(spark, table)
     val (flat, dim) = collectCentroids(spark.table(s"${table}_centroids"))
-    val cCells = spark.table(s"${table}_cells")
-    val cDocs = spark.table(s"${table}_docs")
     val nBase = newBatch.select(col(idCol).as("id"), col(vecCol).as("v"))
     val nAssigned = nBase.select(col("id"),
       explode(routeCellsExpr(col("v"), flat, dim, depth,
         Similarity.ivfGroupProbePolicy(flat.length / dim)))
         .as("cell"))
-    val oversized = cCells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("cellSize"))
-      .filter(col("cellSize") > maxCellSize)
-      .select(col("cell"))
-    val cPruned = cCells.join(broadcast(oversized), Seq("cell"), "left_anti")
-    val candidates = nAssigned.alias("n").join(cPruned.alias("c"),
-        col("n.cell") === col("c.cell") && col("n.id") =!= col("c.id"))
-      .select(col("n.id").as("id_new"), col("c.id").as("id_corpus"))
-      .distinct()
-    candidates
-      .join(nBase.select(col("id").as("id_new"), col("v").as("v1")), "id_new")
-      .join(cDocs.select(col("id").as("id_corpus"), col("v").as("v2")),
-        "id_corpus")
-      .withColumn("cosine", VectorFunctions.cosine(col("v1"), col("v2")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_new"), col("id_corpus"), col("cosine"))
+    val cPruned = dropOversized(spark.table(s"${table}_cells"), cellKey,
+      maxCellSize)
+    verifyPairs(candidatePairs(nAssigned, cPruned, cellKey, probePairs),
+      probePairs, nBase, spark.table(s"${table}_docs"), vectorCosine, threshold)
   }
 
   /** Centroid-staleness audit for a persisted semantic-IVF index

@@ -1,47 +1,15 @@
 package graft.sources
 
-import java.time.LocalDate
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incremental file-source reads: the reference's blob-listing scan with
-  * prefix + modification-time pruning (S1, reference
-  * dags/common_helpers/blob_ingestion.py:9-20) and its lookback-window
-  * calculation (S3, dags/common_helpers/get_dates.py:9-11), re-expressed as
-  * Spark file-source read options. The predicate is evaluated at *listing*
-  * time — storage-level pushdown, no data read for out-of-window files —
-  * where the reference lists, then filters, then downloads sequentially.
+/** Multi-source file reads for the reference's blob ingestion (S1,
+  * reference dags/common_helpers/blob_ingestion.py:9-20). Its prefix
+  * filter is the listing-time `pathGlobFilter` of the streaming and
+  * media readers ([[graft.streaming.Streams.eventsStream]],
+  * [[Multimodal.readBinaryFiles]]); its lookback window (S3) is the
+  * event-time window of the `s3_incremental` query.
   */
 object IncrementalSource {
-
-  /** Lookback bounds: `begin = today − start`, `end = today − stop`; the
-    * DAG uses (15, −1) ⇒ window [today−15, tomorrow) — an open upper bound.
-    */
-  def lookbackBounds(start: Int, stop: Int, today: LocalDate = LocalDate.now()): (LocalDate, LocalDate) =
-    (today.minusDays(start.toLong), today.minusDays(stop.toLong))
-
-  /** Parquet read pruned by file mtime window and optional path glob.
-    * Timestamps are `YYYY-MM-DDTHH:mm:ss` (interpreted in session TZ).
-    * At 100 TB the same shape applies unchanged: pruning happens in the
-    * driver's file index before any executor reads a byte.
-    *
-    * Always pass `schema` for production incremental reads: a window with
-    * zero matching files (the normal "nothing new today" case) cannot
-    * infer a schema and would otherwise fail the run.
-    */
-  def readModifiedWindow(
-      spark: SparkSession, path: String,
-      modifiedAfter: Option[String] = None,
-      modifiedBefore: Option[String] = None,
-      pathGlobFilter: Option[String] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    var r = spark.read
-    schema.foreach(s => r = r.schema(s))
-    modifiedAfter.foreach(v => r = r.option("modifiedAfter", v))
-    modifiedBefore.foreach(v => r = r.option("modifiedBefore", v))
-    pathGlobFilter.foreach(v => r = r.option("pathGlobFilter", v))
-    r.parquet(path)
-  }
 
   /** The reference's 20-way country×type fan-out (10 containers × {IRMQ,
     * IRSession}, dags/evidence_images_processing.py:318-355) as one logical

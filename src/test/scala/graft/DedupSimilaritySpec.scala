@@ -1084,6 +1084,66 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "nassign=2 must recover the boundary pair")
   }
 
+  test("bucket skew guard on every other banded/cell pair operator: self-joins drop a hot bucket; probes count only the corpus side") {
+    // identical rows share every band / cell, so one bucket holds them all
+    val cfg = Dedup.LshConfig(numHashes = 16)
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (i, Seq("near", "dup", "shingles"))).toDF("doc_id", "sh")
+    def vecs(ids: Seq[Long]) =
+      ids.map(i => (i, Array(1.0f, 2.0f, 3.0f, 4.0f))).toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (mhTable, ivfTable) = ("t_guard_mh_spec", "t_guard_ivf_spec")
+    def dropIndexes(): Unit =
+      Seq("_docs", "_bands", "_cells", "_centroids", "_meta").foreach { s =>
+        graft.sources.Sinks.dropTableAndLocation(spark, mhTable + s)
+        graft.sources.Sinks.dropTableAndLocation(spark, ivfTable + s)
+      }
+    dropIndexes()
+    val (corpusIds, batchIds) = (1L to 4L, Seq(5L))
+    Dedup.writeMinHashIndex(docs(corpusIds), "doc_id", col("sh"), cfg,
+      mhTable, numBuckets = 4)
+    Dedup.writeSemanticIvfIndex(vecs(corpusIds), "vec_id", "embedding",
+      vecs(Seq(0L)).select(col("vec_id").as("cell"), col("embedding").as("centroid")),
+      ivfTable, nassign = 1, numBuckets = 4)
+
+    // self operators over 5 identical rows; None = the operator's default limit
+    val selfOps: Seq[(String, Option[Long] => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashNearDups" -> (max => Dedup.minHashNearDups(docs(1L to 5L),
+        "doc_id", col("sh"), 0.5, max.fold(cfg)(m => cfg.copy(maxBucketSize = m)))),
+      "semanticNearDups" -> (max => max.fold(
+        Dedup.semanticNearDups(vecs(1L to 5L), "vec_id", "embedding", 0.9))(m =>
+        Dedup.semanticNearDups(vecs(1L to 5L), "vec_id", "embedding", 0.9,
+          maxBucketSize = m))))
+    val allTen = (for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)).toSet
+    selfOps.foreach { case (name, run) =>
+      assert(pairs(run(Some(3L))) == Set.empty, s"$name: a 5-row bucket over limit 3 must drop")
+      assert(pairs(run(None)) == allTen, s"$name: the default limit must keep all 10 pairs")
+    }
+
+    // probe operators: 4 identical corpus rows + 1 matching batch row
+    val probeOps: Seq[(String, Long => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashNearDupsAgainst" -> (m => Dedup.minHashNearDupsAgainst(
+        docs(corpusIds), docs(batchIds), "doc_id", col("sh"), col("sh"), 0.5,
+        cfg.copy(maxBucketSize = m))),
+      "minHashNearDupsAgainstIndex" -> (m => Dedup.minHashNearDupsAgainstIndex(
+        docs(batchIds), "doc_id", col("sh"), 0.5, mhTable,
+        cfg.copy(maxBucketSize = m))),
+      "semanticNearDupsAgainst" -> (m => Dedup.semanticNearDupsAgainst(
+        vecs(corpusIds), vecs(batchIds), "vec_id", "embedding", 0.9,
+        maxBucketSize = m)),
+      "semanticNearDupsIvfAgainstIndex" -> (m =>
+        Dedup.semanticNearDupsIvfAgainstIndex(vecs(batchIds), "vec_id",
+          "embedding", 0.9, ivfTable, nassign = 1, maxCellSize = m)))
+    val allFour = corpusIds.map(c => (5L, c)).toSet
+    probeOps.foreach { case (name, run) =>
+      assert(pairs(run(4L)) == allFour,
+        s"$name: the batch row must not count toward the 4-row corpus bucket")
+      assert(pairs(run(3L)) == Set.empty, s"$name: a 4-row corpus bucket over limit 3 must drop")
+    }
+    dropIndexes()
+  }
+
   test("two-level IVF routing: exhaustive probe == flat; tight clusters survive gprobe=2") {
     val spark0 = TestSpark.spark
     import spark0.implicits._
