@@ -1,24 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorFunctions
 
 /** Similarity search over embedding columns (`array<float>`): exact
-  * brute-force top-k as the correctness baseline, and two approximate
+  * brute-force top-k as the correctness baseline, and four approximate
   * scale paths — banded random-hyperplane LSH (Charikar, STOC 2002; banding
-  * / OR-amplification as in Mining of Massive Datasets ch. 3) and IVF
-  * coarse quantization (inverted-file probing as in Jégou et al., "Product
-  * quantization for nearest neighbor search", TPAMI 2011 — here without the
-  * PQ compression stage). Distributed top-k shapes follow the
-  * prune-then-rerank pattern surveyed in the retrieved top-k literature
-  * (PAPERS.md: EDBT 2020 incremental top-k; ICDE 2021 REPOSE).
+  * / OR-amplification as in Mining of Massive Datasets ch. 3), IVF coarse
+  * quantization (inverted-file probing), PQ-ADC (asymmetric distance over
+  * product-quantized codes) and their composition IVFADC (all three as in
+  * Jégou et al., "Product quantization for nearest neighbor search", TPAMI
+  * 2011), each with a seeded, externally replayable twin. Distributed top-k
+  * shapes follow the prune-then-rerank pattern surveyed in the retrieved
+  * top-k literature (PAPERS.md: EDBT 2020 incremental top-k; ICDE 2021
+  * REPOSE); every path ends in the same per-query cut (`topKPerQuery`).
   *
-  * Candidate generation in both approximate paths is an EQUI-join on a
-  * small key (band signature / cell id) — hash-partitionable at 100 TB —
-  * never a nested-loop predicate join.
+  * Candidate generation in every approximate path is an EQUI-join on a
+  * small key (band signature / cell id / PQ code) — hash-partitionable at
+  * 100 TB — never a nested-loop predicate join.
+  *
+  * Driver memory: the learned paths bring parameter-sized rows, never
+  * corpus rows, to the driver. [[kmeansCentroids]] collects its sample,
+  * at most max(sampleSize, nlist) rows × dim × 8 bytes (4096 × 768 × 8 ≈
+  * 25 MB at the defaults); [[pqEncode]] collects the m·ksub codebook rows
+  * of dsub doubles, ksub × dim × 8 bytes (16 × 768 × 8 ≈ 98 KB).
   */
 object Similarity {
 
@@ -33,9 +44,15 @@ object Similarity {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = broadcast(q)
-      .join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("cv")))
+    cosineTopK(broadcast(q).join(c, col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The per-query top-k cut every top-k path ends in: rank by score
+    * descending with ties to the lower neighbor id (deterministic), keep
+    * rank ≤ k and the contract columns (query_id, neighbor_id, rank,
+    * score).
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored
@@ -43,6 +60,11 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
   }
+
+  /** `topKPerQuery` over the exact cosine of each (qv, cv) pair. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(
+      pairs.withColumn("score", VectorFunctions.cosine(col("qv"), col("cv"))), k)
 
   /** Recall audit of an ANN top-k result against the exact brute-force
     * scan, as a CHECKABLE per-query contract: one row per query with a
@@ -153,15 +175,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = shortlist.select(col("query_id"), col("neighbor_id"))
+    cosineTopK(shortlist.select(col("query_id"), col("neighbor_id"))
       .join(c, Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      .join(broadcast(q), Seq("query_id")), k)
   }
 
   /** k-NN majority-vote label assignment — the label-spreading /
@@ -929,25 +945,20 @@ object Similarity {
   }
 
   /** K-means centroids over a bounded, deterministically-sampled subset of
-    * the corpus, entirely as DataFrame ops (no driver-side vectors):
-    * hash-ordered sample → first `nlist` rows as init → `iters` Lloyd
-    * rounds (assign = broadcast centroid join + max_by; update =
-    * per-component mean via posexplode). Returns (cell: int,
-    * centroid: array&lt;double&gt;). Cells that lose all members keep their
-    * previous centroid so nlist stays stable.
+    * the corpus, trained as DataFrame ops: hash-ordered sample → first
+    * `nlist` rows as init → `iters` Lloyd rounds (`lloydRound` by
+    * cosine). The init ranks the sample on the driver, so driver memory
+    * holds at most max(sampleSize, nlist) rows × dim × 8 bytes (≈ 25 MB at
+    * sampleSize 4096, dim 768); the rounds keep vectors in executors.
+    * Returns (cell: int, centroid: array&lt;double&gt;). Cells that lose all
+    * members keep their previous centroid so nlist stays stable.
     */
   def kmeansCentroids(
       corpus: DataFrame, vecCol: String,
       nlist: Int, iters: Int = 2, sampleSize: Int = 4096,
       seed: Long = 42L): DataFrame = {
     require(nlist >= 1, s"nlist=$nlist must be >= 1")
-    // Deterministic pseudo-random sample: order by a salted hash of the
-    // vector bytes — independent of input ordering and id clustering.
-    val sample = corpus
-      .select(col(vecCol).as("v"))
-      .withColumn("r", xxhash64(lit(seed), col("v")))
-      .orderBy(col("r").asc)
-      .limit(math.max(sampleSize, nlist))
+    val sample = hashSample(corpus, vecCol, math.max(sampleSize, nlist), seed)
       .localCheckpoint(true)
 
     // Initial centroids: the nlist hash-smallest sample rows. The sample
@@ -966,41 +977,65 @@ object Similarity {
       .sortBy(_.getLong(0))
       .take(nlist)
       .zipWithIndex
-      .map { case (row, idx) => org.apache.spark.sql.Row(idx, row.get(1)) }
+      .map { case (row, idx) => Row(idx, row.get(1)) }
       .toSeq
-    var cents = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(seedRows).asJava),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cell",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("centroid",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType), nullable = false))))
+    val init = spark.createDataFrame(seedRows.asJava, StructType(Seq(
+        StructField("cell", IntegerType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType), nullable = false))))
       .localCheckpoint(true)
 
-    var it = 0
-    while (it < iters) {
-      // assign: nearest centroid per sample row (max_by keeps the shuffle at
-      // one row per sample point after map-side partial aggregation)
-      val assigned = sample.crossJoin(broadcast(cents))
-        .withColumn("score", VectorFunctions.cosine(col("v"), col("centroid")))
-        .groupBy(col("r"), col("v"))
-        .agg(max_by(col("cell"), struct(col("score"), (-col("cell")).as("tb"))).as("cell"))
-      // update: component-wise mean per cell
-      val updated = assigned
-        .select(col("cell"), posexplode(col("v").cast("array<double>")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).getField("m").as("centroid"))
-      cents = cents.alias("old")
-        .join(updated.alias("nw"), Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("nw.centroid"), col("old.centroid")).as("centroid"))
-        .localCheckpoint(true)
-      it += 1
+    (0 until iters).foldLeft(init) { (cents, _) =>
+      lloydRound(sample, cents, Nil, "v",
+        VectorFunctions.cosine(col("v"), col("centroid"))).localCheckpoint(true)
     }
-    cents
+  }
+
+  /** Deterministic pseudo-random sample of `n` corpus vectors as (v, r):
+    * ordered by a salted hash of the vector bytes, so it is independent of
+    * input ordering and id clustering.
+    */
+  private def hashSample(corpus: DataFrame, vecCol: String, n: Int,
+                         seed: Long): DataFrame =
+    corpus
+      .select(col(vecCol).as("v"))
+      .withColumn("r", xxhash64(lit(seed), col("v")))
+      .orderBy(col("r").asc)
+      .limit(n)
+
+  /** The nearest-cell argmax as a `max_by` aggregate over rows carrying
+    * `cell` and `score`: ties break to the lowest cell id for determinism.
+    */
+  private def argmaxCell: Column =
+    max_by(col("cell"), struct(col("score"), (-col("cell")).as("tb")))
+
+  /** One Lloyd round over a hash sample (r, `vec`, groups…): assign each
+    * sample vector to its best cell by `score` (within its `groups`, e.g.
+    * the PQ subspace; across all cells when `groups` is empty — a cross
+    * join of the broadcast centroids), move each cell to the component-
+    * wise mean of its members, and keep the previous centroid of a cell
+    * that lost all members, so the cell count stays stable. max_by keeps
+    * the assign shuffle at one row per sample point after map-side partial
+    * aggregation. The caller checkpoints the result.
+    */
+  private def lloydRound(
+      sample: DataFrame, cents: DataFrame, groups: Seq[String], vec: String,
+      score: Column): DataFrame = {
+    val keys = (groups :+ "cell").map(col)
+    val joined =
+      if (groups.isEmpty) sample.crossJoin(broadcast(cents))
+      else sample.join(broadcast(cents), groups)
+    val assigned = joined
+      .withColumn("score", score)
+      .groupBy(groups.map(col) ++ Seq(col("r"), col(vec)): _*)
+      .agg(argmaxCell.as("cell"))
+    val updated = assigned
+      .select(keys :+ posexplode(col(vec).cast("array<double>")).as(Seq("pos", "x")): _*)
+      .groupBy(keys :+ col("pos"): _*).agg(avg(col("x")).as("mn"))
+      .groupBy(keys: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("mn")))).getField("mn").as("centroid"))
+    cents.alias("old")
+      .join(updated.alias("nw"), groups :+ "cell", "left")
+      .select(keys :+ coalesce(col("nw.centroid"), col("old.centroid")).as("centroid"): _*)
   }
 
   /** IVF (inverted-file) approximate top-k: corpus vectors are assigned to
@@ -1035,9 +1070,51 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int, seedPred: Column): DataFrame = {
     if (queries.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val cents = corpus.filter(seedPred)
+    ivfProbeTopK(seededCells(corpus, idCol, vecCol, seedPred),
+      corpus, queries, idCol, vecCol, k, nprobe)
+  }
+
+  /** Coarse cells anchored at the rows `seedPred` selects: (cell = id,
+    * centroid = vector). */
+  private def seededCells(corpus: DataFrame, idCol: String, vecCol: String,
+                          seedPred: Column): DataFrame =
+    corpus.filter(seedPred)
       .select(col(idCol).as("cell"), col(vecCol).as("centroid"))
-    ivfProbeTopK(cents, corpus, queries, idCol, vecCol, k, nprobe)
+
+  /** Corpus routing: each corpus vector's nearest cell by cosine to the
+    * broadcast centroids `cents`, as (`idOut`, [cv,] `cellOut`). max_by
+    * folds the nlist-way expansion back to one row per vector map-side;
+    * ties break to the lowest cell id. `keepVec` carries the vector along
+    * as `cv` for an exact rerank.
+    */
+  private def routeCorpus(
+      corpus: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+      idOut: String, cellOut: String, keepVec: Boolean): DataFrame = {
+    val aggs = (if (keepVec) Seq(first(col("cv")).as("cv")) else Nil) :+
+      argmaxCell.as(cellOut)
+    corpus
+      .select(col(idCol).as(idOut), col(vecCol).as("cv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("score", VectorFunctions.cosine(col("cv"), col("centroid")))
+      .groupBy(col(idOut))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Query routing: each query's top-`nprobe` cells by cosine to the
+    * broadcast centroids (ties to the lower cell), one (query_id, qv,
+    * cell, …) row per probe.
+    */
+  private def probeCells(
+      queries: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+      nprobe: Int): DataFrame = {
+    val pw = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("cell").asc)
+    queries
+      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("score", VectorFunctions.cosine(col("qv"), col("centroid")))
+      .withColumn("prank", row_number().over(pw))
+      .filter(col("prank") <= nprobe)
   }
 
   /** Shared IVF probe: assign corpus rows to their nearest cell, probe the
@@ -1046,38 +1123,13 @@ object Similarity {
   private def ivfProbeTopK(
       cents: DataFrame, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-
-    // corpus side: nearest cell per vector. max_by folds the nlist-way
-    // expansion back to one row per vector map-side; ties break to the
-    // lowest cell id for determinism.
-    val assigned = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score", VectorFunctions.cosine(col("cv"), col("centroid")))
-      .groupBy(col("neighbor_id"))
-      .agg(first(col("cv")).as("cv"),
-        max_by(col("cell"), struct(col("score"), (-col("cell")).as("tb"))).as("cell"))
-
-    // query side: top-nprobe cells, exploded to (query, cell) probes
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cell").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(pw))
-      .filter(col("prank") <= nprobe)
+    val assigned = routeCorpus(corpus, idCol, vecCol, cents,
+      "neighbor_id", "cell", keepVec = true)
+    val probes = probeCells(queries, idCol, vecCol, cents, nprobe)
       .select(col("query_id"), col("qv"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    broadcast(probes)
+    cosineTopK(broadcast(probes)
       .join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Column of the m subspace slices of a vector: [v[0..dsub), v[dsub..2dsub), …]. */
@@ -1109,13 +1161,8 @@ object Similarity {
     require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
     val dsub = dim / m
 
-    // Deterministic bounded sample (hash-ordered, like kmeansCentroids),
-    // exploded once to (subspace, r, sv) sub-vector rows.
-    val sample = corpus
-      .select(col(vecCol).as("v"))
-      .withColumn("r", xxhash64(lit(seed), col("v")))
-      .orderBy(col("r").asc)
-      .limit(math.max(sampleSize, ksub))
+    // The hash sample exploded once to (subspace, r, sv) sub-vector rows.
+    val sample = hashSample(corpus, vecCol, math.max(sampleSize, ksub), seed)
       .select(col("r"),
         posexplode(subspaceSlices(col("v").cast("array<double>"), m, dsub))
           .as(Seq("subspace", "sv")))
@@ -1127,33 +1174,30 @@ object Similarity {
     val iw = Window.partitionBy(col("subspace")).orderBy(col("r").asc)
     def withNorm(c: DataFrame): DataFrame =
       c.withColumn("cnorm2", VectorFunctions.dot(col("centroid"), col("centroid")))
-    var books = withNorm(sample
+    val init = withNorm(sample
       .withColumn("rk", row_number().over(iw))
       .filter(col("rk") <= ksub)
       .select(col("subspace"), (col("rk") - 1).as("cell"), col("sv").as("centroid")))
       .localCheckpoint(true)
 
-    var it = 0
-    while (it < iters) {
-      val assigned = sample.join(broadcast(books), Seq("subspace"))
-        .withColumn("score",
-          lit(2.0) * VectorFunctions.dot(col("sv"), col("centroid")) - col("cnorm2"))
-        .groupBy(col("subspace"), col("r"), col("sv"))
-        .agg(max_by(col("cell"), struct(col("score"), (-col("cell")).as("tb"))).as("cell"))
-      val updated = assigned
-        .select(col("subspace"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("subspace"), col("cell"), col("pos")).agg(avg(col("x")).as("mn"))
-        .groupBy(col("subspace"), col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mn")))).getField("mn").as("centroid"))
-      books = withNorm(books.alias("old")
-        .join(updated.alias("nw"), Seq("subspace", "cell"), "left")
-        .select(col("subspace"), col("cell"),
-          coalesce(col("nw.centroid"), col("old.centroid")).as("centroid")))
+    (0 until iters).foldLeft(init) { (books, _) =>
+      withNorm(lloydRound(sample, books, Seq("subspace"), "sv",
+        lit(2.0) * VectorFunctions.dot(col("sv"), col("centroid")) - col("cnorm2")))
         .localCheckpoint(true)
-      it += 1
     }
-    books
   }
+
+  /** PQ codebooks whose cells are the subspace slices of the rows
+    * `seedPred` selects: (subspace, cell = id, centroid, cnorm2). */
+  private def seededCodebooks(
+      corpus: DataFrame, idCol: String, vecCol: String, seedPred: Column,
+      m: Int, dsub: Int): DataFrame =
+    corpus.filter(seedPred)
+      .select(col(idCol).cast("int").as("cell"),
+        posexplode(subspaceSlices(col(vecCol).cast("array<double>"), m, dsub))
+          .as(Seq("subspace", "centroid")))
+      .withColumn("cnorm2", VectorFunctions.dot(col("centroid"), col("centroid")))
+      .select(col("subspace"), col("cell"), col("centroid"), col("cnorm2"))
 
   /** PQ-encode a corpus: one code (nearest codebook cell) per subspace,
     * via the one-pass codegen'd [[graft.functions.PqEncodeCodes]]
@@ -1216,16 +1260,11 @@ object Similarity {
   def pqAdcTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, m: Int = 8, ksub: Int = 16, iters: Int = 2,
-      sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
-    val dimRow = queries.select(size(col(vecCol))).limit(1).collect().headOption
-    if (dimRow.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val dim = dimRow.get.getInt(0)
-    require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    val dsub = dim / m
-
-    val books = pqCodebooks(corpus, vecCol, m, ksub, iters, sampleSize, seed)
-    pqAdcScoreTopK(books, corpus, queries, idCol, vecCol, k, m, dsub)
-  }
+      sampleSize: Int = 4096, seed: Long = 42L): DataFrame =
+    withSubDim(corpus, queries, idCol, vecCol, m) { dsub =>
+      val books = pqCodebooks(corpus, vecCol, m, ksub, iters, sampleSize, seed)
+      pqAdcScoreTopK(books, corpus, queries, idCol, vecCol, k, m, dsub)
+    }
 
   /** Deterministic seeded-codebook ADC: codebook cells are the subspace
     * slices of caller-selected SEED rows (`seedPred` must select exactly
@@ -1237,20 +1276,11 @@ object Similarity {
     */
   def pqSeededAdcTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, m: Int, seedPred: Column): DataFrame = {
-    val dimRow = queries.select(size(col(vecCol))).limit(1).collect().headOption
-    if (dimRow.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val dim = dimRow.get.getInt(0)
-    require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    val dsub = dim / m
-    val books = corpus.filter(seedPred)
-      .select(col(idCol).cast("int").as("cell"),
-        posexplode(subspaceSlices(col(vecCol).cast("array<double>"), m, dsub))
-          .as(Seq("subspace", "centroid")))
-      .withColumn("cnorm2", VectorFunctions.dot(col("centroid"), col("centroid")))
-      .select(col("subspace"), col("cell"), col("centroid"), col("cnorm2"))
-    pqAdcScoreTopK(books, corpus, queries, idCol, vecCol, k, m, dsub)
-  }
+      k: Int, m: Int, seedPred: Column): DataFrame =
+    withSubDim(corpus, queries, idCol, vecCol, m) { dsub =>
+      pqAdcScoreTopK(seededCodebooks(corpus, idCol, vecCol, seedPred, m, dsub),
+        corpus, queries, idCol, vecCol, k, m, dsub)
+    }
 
   /** Shared ADC scorer: encode the corpus against `books`, build each
     * query's (subspace, cell) → dot lookup table, sum per-pair dots in
@@ -1260,30 +1290,11 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, m: Int, dsub: Int): DataFrame = {
     val codes = pqEncode(corpus, idCol, vecCol, books, m, dsub)
     val qtab = pqQueryTable(queries, idCol, vecCol, books, m, dsub)
-
-    val scored = codes
+    topKPerQuery(adcScores(codes
       .select(col("id").as("neighbor_id"), col("norm2"),
         posexplode(col("codes")).as(Seq("subspace", "cell")))
       .join(broadcast(qtab), Seq("subspace", "cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(
-        aggregate(
-          array_sort(collect_list(struct(col("subspace"), col("qdot")))),
-          lit(0.0), (acc, x) => acc + x.getField("qdot")).as("adot"),
-        first(col("norm2")).as("norm2"),
-        first(col("qnorm")).as("qnorm"))
-      .withColumn("score",
-        when(col("norm2") > 0.0 && col("qnorm") > 0.0,
-          col("adot") / (col("qnorm") * sqrt(col("norm2"))))
-          .otherwise(lit(0.0)))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      .filter(col("query_id") =!= col("neighbor_id"))), k)
   }
 
   /** Per-query ADC lookup table: (query_id, qnorm, subspace, cell, qdot)
@@ -1302,6 +1313,26 @@ object Similarity {
       .join(broadcast(codebooks), Seq("subspace"))
       .select(col("query_id"), col("qnorm"), col("subspace"), col("cell"),
         VectorFunctions.dot(col("qsv"), col("centroid")).as("qdot"))
+
+  /** ADC score per (query_id, neighbor_id) from its lookup-table hits
+    * (subspace, qdot, norm2, qnorm): the approximate dot folds the hits
+    * sorted by subspace (deterministic float order, not a shuffle-order-
+    * dependent SUM), and the cosine divides by the query norm and the
+    * code's reconstructed norm (0 when either is 0).
+    */
+  private def adcScores(hits: DataFrame): DataFrame =
+    hits
+      .groupBy(col("query_id"), col("neighbor_id"))
+      .agg(
+        aggregate(
+          array_sort(collect_list(struct(col("subspace"), col("qdot")))),
+          lit(0.0), (acc, x) => acc + x.getField("qdot")).as("adot"),
+        first(col("norm2")).as("norm2"),
+        first(col("qnorm")).as("qnorm"))
+      .withColumn("score",
+        when(col("norm2") > 0.0 && col("qnorm") > 0.0,
+          col("adot") / (col("qnorm") * sqrt(col("norm2"))))
+          .otherwise(lit(0.0)))
 
   /** Full IVFADC (Jégou et al. 2011 §IV, the standard billion-scale ANN
     * architecture): the IVF coarse quantizer routes each query to its
@@ -1326,15 +1357,11 @@ object Similarity {
       sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist,
       s"nprobe=$nprobe must be in [1, nlist=$nlist]")
-    val dimRow = queries.select(size(col(vecCol))).limit(1).collect().headOption
-    if (dimRow.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val dim = dimRow.get.getInt(0)
-    require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    val dsub = dim / m
-
-    val cents = kmeansCentroids(corpus, vecCol, nlist, kmeansIters, sampleSize, seed)
-    val books = pqCodebooks(corpus, vecCol, m, ksub, pqIters, sampleSize, seed)
-    ivfPqScoreTopK(cents, books, corpus, queries, idCol, vecCol, k, nprobe, m, dsub)
+    withSubDim(corpus, queries, idCol, vecCol, m) { dsub =>
+      val cents = kmeansCentroids(corpus, vecCol, nlist, kmeansIters, sampleSize, seed)
+      val books = pqCodebooks(corpus, vecCol, m, ksub, pqIters, sampleSize, seed)
+      ivfPqScoreTopK(cents, books, corpus, queries, idCol, vecCol, k, nprobe, m, dsub)
+    }
   }
 
   /** Deterministic seeded IVFADC: seeded coarse cells ([[ivfSeededTopK]])
@@ -1346,22 +1373,12 @@ object Similarity {
   def ivfPqSeededTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int, m: Int,
-      cellSeedPred: Column, bookSeedPred: Column): DataFrame = {
-    val dimRow = queries.select(size(col(vecCol))).limit(1).collect().headOption
-    if (dimRow.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val dim = dimRow.get.getInt(0)
-    require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    val dsub = dim / m
-    val cents = corpus.filter(cellSeedPred)
-      .select(col(idCol).as("cell"), col(vecCol).as("centroid"))
-    val books = corpus.filter(bookSeedPred)
-      .select(col(idCol).cast("int").as("cell"),
-        posexplode(subspaceSlices(col(vecCol).cast("array<double>"), m, dsub))
-          .as(Seq("subspace", "centroid")))
-      .withColumn("cnorm2", VectorFunctions.dot(col("centroid"), col("centroid")))
-      .select(col("subspace"), col("cell"), col("centroid"), col("cnorm2"))
-    ivfPqScoreTopK(cents, books, corpus, queries, idCol, vecCol, k, nprobe, m, dsub)
-  }
+      cellSeedPred: Column, bookSeedPred: Column): DataFrame =
+    withSubDim(corpus, queries, idCol, vecCol, m) { dsub =>
+      ivfPqScoreTopK(seededCells(corpus, idCol, vecCol, cellSeedPred),
+        seededCodebooks(corpus, idCol, vecCol, bookSeedPred, m, dsub),
+        corpus, queries, idCol, vecCol, k, nprobe, m, dsub)
+    }
 
   /** Shared IVFADC core: route corpus and queries over `cents`, ADC-score
     * probed cells' codes against `books` in fixed subspace order. */
@@ -1369,58 +1386,46 @@ object Similarity {
       cents: DataFrame, books: DataFrame, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       m: Int, dsub: Int): DataFrame = {
-    // corpus routing: nearest coarse cell per vector (id-keyed, fold the
-    // nlist-way expansion map-side) — renamed ivf_cell so it cannot collide
-    // with the PQ codebook's `cell` column downstream
-    val cellOf = corpus
-      .select(col(idCol).as("id"), col(vecCol).as("cv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score", VectorFunctions.cosine(col("cv"), col("centroid")))
-      .groupBy(col("id"))
-      .agg(max_by(col("cell"), struct(col("score"), (-col("cell")).as("tb")))
-        .as("ivf_cell"))
-
+    // the coarse cell is named ivf_cell so it cannot collide with the PQ
+    // codebook's `cell` column downstream
+    val cellOf = routeCorpus(corpus, idCol, vecCol, cents,
+      "id", "ivf_cell", keepVec = false)
     val codes = pqEncode(corpus, idCol, vecCol, books, m, dsub)
       .join(cellOf, Seq("id"))
-
-    // query routing: top-nprobe coarse cells per query
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cell").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(pw))
-      .filter(col("prank") <= nprobe)
+    val probes = probeCells(queries, idCol, vecCol, cents, nprobe)
       .select(col("query_id"), col("cell").as("ivf_cell"))
-
     val qtab = pqQueryTable(queries, idCol, vecCol, books, m, dsub)
-
-    val scored = codes
+    topKPerQuery(adcScores(codes
       .join(broadcast(probes), Seq("ivf_cell"))
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"), col("norm2"),
         posexplode(col("codes")).as(Seq("subspace", "cell")))
-      .join(broadcast(qtab), Seq("query_id", "subspace", "cell"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(
-        aggregate(
-          array_sort(collect_list(struct(col("subspace"), col("qdot")))),
-          lit(0.0), (acc, x) => acc + x.getField("qdot")).as("adot"),
-        first(col("norm2")).as("norm2"),
-        first(col("qnorm")).as("qnorm"))
-      .withColumn("score",
-        when(col("norm2") > 0.0 && col("qnorm") > 0.0,
-          col("adot") / (col("qnorm") * sqrt(col("norm2"))))
-          .otherwise(lit(0.0)))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      .join(broadcast(qtab), Seq("query_id", "subspace", "cell"))), k)
   }
+
+  /** Run `body` on the query vectors' dimension, probed from one row; an
+    * empty query set returns `emptyTopK` instead. The dimension comes
+    * from the data because a silent mismatch would work on prefix
+    * components (DotProduct loops to min length).
+    */
+  private def withQueryDim(corpus: DataFrame, queries: DataFrame,
+                           idCol: String, vecCol: String)(
+      body: Int => DataFrame): DataFrame =
+    queries.select(size(col(vecCol))).limit(1).collect().headOption match {
+      case None => emptyTopK(corpus, queries, idCol)
+      case Some(row) => body(row.getInt(0))
+    }
+
+  /** `withQueryDim` for the PQ paths: refuses a dimension that `m` does
+    * not divide, and hands `body` the subvector width dsub = dim / m.
+    */
+  private def withSubDim(corpus: DataFrame, queries: DataFrame,
+                         idCol: String, vecCol: String, m: Int)(
+      body: Int => DataFrame): DataFrame =
+    withQueryDim(corpus, queries, idCol, vecCol) { dim =>
+      require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
+      body(dim / m)
+    }
 
   /** Approximate top-k via banded hyperplane LSH: `numBands` independent
     * `bandBits`-plane signatures per vector; a corpus vector is a candidate
@@ -1448,51 +1453,42 @@ object Similarity {
       s"probeDepth=$probeDepth must be 0 (exact buckets), 1 (single-bit " +
         "probes) or 2 (query-directed probes over <=2-bit flip sets)")
     require(maxProbeBits >= 1, s"maxProbeBits=$maxProbeBits must be >= 1")
-    // derive dimensionality from the data — a silent mismatch would bucket
-    // on prefix components (DotProduct loops to min length)
-    val dimRow = queries.select(size(col(vecCol))).limit(1).collect().headOption
-    if (dimRow.isEmpty) return emptyTopK(corpus, queries, idCol)
-    val planes = hyperplanes(dimRow.get.getInt(0), bandBits * numBands, seed)
+    withQueryDim(corpus, queries, idCol, vecCol) { dim =>
+      val planes = hyperplanes(dim, bandBits * numBands, seed)
 
-    // Multi-probe (Lv et al., "Multi-probe LSH", VLDB 2007), margin-aware:
-    // ALSO probe the buckets whose signature differs on LEAST-CONFIDENT
-    // bits — near-misses on a small-|dot| hyperplane are the dominant
-    // false-negative mode, so band recall jumps from p^b toward
-    // p^b + b·p^(b−1)(1−p) for query-side fan-out ×(probes+1), and the
-    // fan-out stays CONSTANT when a deployment widens bands with log n
-    // (the lshGeometry scaling rule). probeDepth=1 probes the
-    // min(bandBits, maxProbeBits) single-bit flips; probeDepth=2 is the
-    // full QUERY-DIRECTED sequence (Lv §4.2) — the maxProbeBits best flip
-    // SETS of ≤2 bits ranked by summed margin, so two near-zero margins
-    // out-rank one confident plane and the same recall needs fewer probe
-    // rows (RecallBench measures the trade). The CORPUS side is untouched:
-    // same buckets, same storage, still a pure equi-join — recall is
-    // bought with query rows, not memory.
-    val q = if (probeDepth == 0)
-      bandedSignatures(queries, "query_id", "qv", idCol, vecCol,
+      // Multi-probe (Lv et al., "Multi-probe LSH", VLDB 2007), margin-aware:
+      // ALSO probe the buckets whose signature differs on LEAST-CONFIDENT
+      // bits — near-misses on a small-|dot| hyperplane are the dominant
+      // false-negative mode, so band recall jumps from p^b toward
+      // p^b + b·p^(b−1)(1−p) for query-side fan-out ×(probes+1), and the
+      // fan-out stays CONSTANT when a deployment widens bands with log n
+      // (the lshGeometry scaling rule). probeDepth=1 probes the
+      // min(bandBits, maxProbeBits) single-bit flips; probeDepth=2 is the
+      // full QUERY-DIRECTED sequence (Lv §4.2) — the maxProbeBits best flip
+      // SETS of ≤2 bits ranked by summed margin, so two near-zero margins
+      // out-rank one confident plane and the same recall needs fewer probe
+      // rows (RecallBench measures the trade). The CORPUS side is untouched:
+      // same buckets, same storage, still a pure equi-join — recall is
+      // bought with query rows, not memory.
+      val q = if (probeDepth == 0)
+        bandedSignatures(queries, "query_id", "qv", idCol, vecCol,
+          planes, bandBits, numBands)
+      else
+        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+            posexplode(graft.functions.VectorFunctions.hyperplaneProbes(
+              col(vecCol), planes, bandBits, maxProbeBits,
+              maxFlip = probeDepth))
+              .as(Seq("band", "probeSigs")))
+          .select(col("query_id"), col("qv"), col("band"),
+            explode(col("probeSigs")).as("bandSig"))
+      val c = bandedSignatures(corpus, "neighbor_id", "cv", idCol, vecCol,
         planes, bandBits, numBands)
-    else
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-          posexplode(graft.functions.VectorFunctions.hyperplaneProbes(
-            col(vecCol), planes, bandBits, maxProbeBits,
-            maxFlip = probeDepth))
-            .as(Seq("band", "probeSigs")))
-        .select(col("query_id"), col("qv"), col("band"),
-          explode(col("probeSigs")).as("bandSig"))
-    val c = bandedSignatures(corpus, "neighbor_id", "cv", idCol, vecCol,
-      planes, bandBits, numBands)
-    // a pair can collide in several bands — dedupe before the rerank so
-    // row_number sees each candidate once
-    val candidates = broadcast(q)
-      .join(c, Seq("band", "bandSig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    candidates
-      .withColumn("score", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      // a pair can collide in several bands — dedupe before the rerank so
+      // row_number sees each candidate once
+      cosineTopK(broadcast(q)
+        .join(c, Seq("band", "bandSig"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .dropDuplicates("query_id", "neighbor_id"), k)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -290,12 +291,51 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "margin-truncated probes must not lose recall vs exact buckets")
   }
 
-  test("LSH ANN top-k returns empty (not an error) for an empty query set") {
+  /** The PQ top-k entry points over the fixture embeddings, as
+    * (queries, m) => result. Seed predicates are never evaluated by the
+    * empty-set or refusal cases that use this table. */
+  private def pqTopKPaths(emb: DataFrame): Seq[(String, (DataFrame, Int) => DataFrame)] = {
+    val seeds = col("vec_id") < 16
+    Seq(
+      "pqAdcTopK" -> ((q, m) =>
+        Similarity.pqAdcTopK(emb, q, "vec_id", "embedding", 5, m = m)),
+      "pqSeededAdcTopK" -> ((q, m) =>
+        Similarity.pqSeededAdcTopK(emb, q, "vec_id", "embedding", 5, m, seeds)),
+      "ivfPqTopK" -> ((q, m) =>
+        Similarity.ivfPqTopK(emb, q, "vec_id", "embedding", 5, m = m)),
+      "ivfPqSeededTopK" -> ((q, m) =>
+        Similarity.ivfPqSeededTopK(emb, q, "vec_id", "embedding", 5, 4, m,
+          seeds, seeds)))
+  }
+
+  test("every ANN top-k returns empty (not an error) for an empty query set") {
     val emb = Tables.embeddings(spark, TestSpark.sf)
-    val out = Similarity.lshTopK(emb, emb.filter(col("vec_id") < 0),
-      "vec_id", "embedding", 5)
-    assert(out.count() == 0)
-    assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "score"))
+    val none = emb.filter(col("vec_id") < 0)
+    val paths = Seq[(String, DataFrame => DataFrame)](
+      "lshTopK" -> (q => Similarity.lshTopK(emb, q, "vec_id", "embedding", 5)),
+      "ivfTopK" -> (q => Similarity.ivfTopK(emb, q, "vec_id", "embedding", 5)),
+      "ivfSeededTopK" -> (q => Similarity.ivfSeededTopK(emb, q, "vec_id",
+        "embedding", 5, 4, col("vec_id") < 16))) ++
+      pqTopKPaths(emb).map { case (name, topK) => name -> (topK(_, 8)) }
+    for ((name, topK) <- paths) {
+      val out = topK(none)
+      assert(out.count() == 0, name)
+      assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "score"),
+        name)
+    }
+  }
+
+  test("PQ top-k entry points refuse a dim that m does not divide") {
+    val emb = Tables.embeddings(spark, TestSpark.sf)
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val m = 5
+    assert(dim % m != 0, s"fixture dim=$dim must not be a multiple of m=$m")
+    val some = emb.filter(col("vec_id") < 2)
+    for ((name, topK) <- pqTopKPaths(emb)) {
+      val e = intercept[IllegalArgumentException](topK(some, m))
+      assert(e.getMessage.contains(s"dim=$dim") && e.getMessage.contains(s"m=$m"),
+        s"$name: ${e.getMessage}")
+    }
   }
 
   test("PQ ADC top-k: high recall on clustered vectors, valid codes, deterministic") {
